@@ -1,11 +1,14 @@
 """Frontier: determinism vs the sequential oracle, parallelism invariance,
 and checkpoint resume (north_rule requirements)."""
 
+import shutil
+
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from warc2zim_spark.frontier.crawl import last_committed_wave, resume_crawl, run_crawl
+from warc2zim_spark.frontier import seenfilter
+from warc2zim_spark.frontier.crawl import last_committed_wave, run_crawl
 
 
 @pytest.fixture(scope="module")
@@ -18,6 +21,44 @@ def web_tables(spark, webdata):
 
 def schedule_key(rows):
     return sorted((r.wave, r.surt_key, r.hops, round(r.score, 9)) for r in rows)
+
+
+# budgets of the crawl the fault tests interrupt and compare against
+CRAWL = dict(host_budget=4, wave_budget=50)
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, web_tables, tmp_path_factory):
+    """seen_mode → (checkpoint dir, schedule key) of an uninterrupted
+    3-wave crawl."""
+    seeds, robots, pages = web_tables
+    out = {}
+    for mode in ("exact", "bloom"):
+        ckpt = tmp_path_factory.mktemp(f"full_{mode}")
+        rows = run_crawl(
+            spark, seeds, pages, robots, str(ckpt), max_waves=3,
+            seen_mode=mode, **CRAWL,
+        ).collect()
+        out[mode] = (ckpt, schedule_key(rows))
+    return out
+
+
+@pytest.fixture
+def bloom_builds(monkeypatch):
+    """Key frames passed to ``build_bloom`` during the test, in call order."""
+    calls = []
+    real = seenfilter.build_bloom
+
+    def spy(seen, *args, **kwargs):
+        calls.append(seen)
+        return real(seen, *args, **kwargs)
+
+    monkeypatch.setattr(seenfilter, "build_bloom", spy)
+    return calls
+
+
+def _keys(df):
+    return sorted(r.surt_key for r in df.select("surt_key").collect())
 
 
 class TestDeterminism:
@@ -73,7 +114,7 @@ class TestResume:
             max_waves=2, host_budget=4, wave_budget=50,
         )
         assert last_committed_wave(str(tmp_path / "partial")) == 1
-        resumed = resume_crawl(
+        resumed = run_crawl(
             spark, seeds, pages, robots, str(tmp_path / "partial"),
             max_waves=3, host_budget=4, wave_budget=50,
         ).collect()
@@ -169,53 +210,6 @@ class TestPoliteness:
         assert not (deny_hosts & scheduled_hosts)
 
 
-class TestCuckooFilter:
-    """north_rule names bloom/cuckoo: the cuckoo variant adds DELETION
-    (recrawl/expiry) that blooms cannot express."""
-
-    def _seen(self, spark, webdata):
-        from warc2zim_spark.functions import udfs
-
-        pages = spark.read.parquet(f"{webdata}/pages.parquet")
-        return (
-            pages.select(udfs.surt_key(F.col("url")).alias("surt_key"))
-            .filter(F.col("surt_key").isNotNull())
-            .distinct()
-        )
-
-    def test_no_false_negatives_and_fp_budget(self, spark, webdata):
-        from warc2zim_spark.frontier.seenfilter import build_cuckoo, probe_cuckoo
-
-        seen = self._seen(spark, webdata)
-        filt = build_cuckoo(seen)
-        hits = probe_cuckoo(seen, filt, keep="hit")
-        assert hits.count() == seen.count()  # zero false negatives
-        absent = spark.range(2000).select(
-            F.concat(F.lit("never-seen.example/"), F.col("id")).alias("surt_key")
-        )
-        fp = probe_cuckoo(absent, filt, keep="hit").count()
-        assert fp <= 2000 * 0.05  # 1-byte fingerprints: ~3% budget
-
-    def test_delete_reopens_urls(self, spark, webdata):
-        from warc2zim_spark.frontier.seenfilter import (
-            build_cuckoo,
-            cuckoo_delete_keys,
-            probe_cuckoo,
-        )
-
-        seen = self._seen(spark, webdata)
-        filt = build_cuckoo(seen)
-        stale = seen.orderBy("surt_key").limit(50)
-        filt2 = cuckoo_delete_keys(filt, stale)
-        reopened = probe_cuckoo(stale, filt2, keep="miss").count()
-        # deleted keys become crawlable again (minus fingerprint collisions
-        # with still-present keys)
-        assert reopened >= 45
-        # everything else stays present: no false negatives introduced
-        rest = seen.join(stale, "surt_key", "left_anti")
-        assert probe_cuckoo(rest, filt2, keep="hit").count() == rest.count()
-
-
 class TestBloomModeCrawl:
     def test_bloom_schedule_equals_exact(self, spark, web_tables, tmp_path):
         """The bloom-driven crawl (north_star headline mode) schedules the
@@ -235,7 +229,9 @@ class TestBloomModeCrawl:
         # and the filter itself was persisted for resume
         assert any((tmp_path / "bl").glob("seen_bloom_wave=*"))
 
-    def test_bloom_resume_from_persisted_filter(self, spark, web_tables, tmp_path):
+    def test_bloom_resume_from_persisted_filter(
+        self, spark, web_tables, tmp_path, bloom_builds
+    ):
         """north_rule resumability in the headline mode: restart picks up
         the persisted bloom parquet, not a key rebuild."""
         seeds, robots, pages = web_tables
@@ -247,8 +243,98 @@ class TestBloomModeCrawl:
             spark, seeds, pages, robots, str(tmp_path / "bp"),
             max_waves=2, host_budget=4, wave_budget=50, seen_mode="bloom",
         )
-        resumed = resume_crawl(
+        bloom_builds.clear()
+        resumed = run_crawl(
             spark, seeds, pages, robots, str(tmp_path / "bp"),
             max_waves=3, host_budget=4, wave_budget=50, seen_mode="bloom",
         ).collect()
         assert schedule_key(resumed) == schedule_key(full)
+        # the only filter built is the resumed wave 2's own
+        wave2 = [r.surt_key for r in resumed if r.wave == 2]
+        assert [_keys(df) for df in bloom_builds] == [sorted(wave2)]
+
+
+class TestResumeFaults:
+    """A run interrupted at a write barrier, then restarted with the same
+    ``run_crawl`` call, schedules exactly what an uninterrupted run does."""
+
+    @pytest.mark.parametrize("mode", ["exact", "bloom"])
+    def test_wave_without_marker_recomputed(
+        self, spark, web_tables, uninterrupted, tmp_path, mode
+    ):
+        """Crash after wave 1's parquet write, before its marker: the
+        stranded directory (here holding wrong rows) is recomputed and
+        overwritten."""
+        seeds, robots, pages = web_tables
+        ckpt = tmp_path / "c"
+        run_crawl(
+            spark, seeds, pages, robots, str(ckpt), max_waves=2,
+            seen_mode=mode, **CRAWL,
+        )
+        (ckpt / "wave=1._SUCCESS_WAVE").unlink()
+        spark.read.parquet(str(ckpt / "wave=0")).withColumn(
+            "wave", F.lit(1)
+        ).write.mode("overwrite").parquet(str(ckpt / "wave=1"))
+        assert last_committed_wave(str(ckpt)) == 0
+        resumed = run_crawl(
+            spark, seeds, pages, robots, str(ckpt), max_waves=3,
+            seen_mode=mode, **CRAWL,
+        ).collect()
+        assert schedule_key(resumed) == uninterrupted[mode][1]
+        assert last_committed_wave(str(ckpt)) == 2
+
+    def test_missing_bloom_rebuilt_from_committed_keys(
+        self, spark, web_tables, uninterrupted, tmp_path, bloom_builds
+    ):
+        """Crash after wave 1's marker, before ``seen_bloom_wave=1`` is
+        persisted: the filter is rebuilt from the committed waves' keys."""
+        seeds, robots, pages = web_tables
+        ckpt = tmp_path / "c"
+        run_crawl(
+            spark, seeds, pages, robots, str(ckpt), max_waves=2,
+            seen_mode="bloom", **CRAWL,
+        )
+        shutil.rmtree(ckpt / "seen_bloom_wave=1")
+        committed = _keys(spark.read.parquet(str(ckpt / "wave=0"), str(ckpt / "wave=1")))
+        bloom_builds.clear()
+        resumed = run_crawl(
+            spark, seeds, pages, robots, str(ckpt), max_waves=3,
+            seen_mode="bloom", **CRAWL,
+        ).collect()
+        assert schedule_key(resumed) == uninterrupted["bloom"][1]
+        assert _keys(bloom_builds[0]) == committed
+
+    @pytest.mark.parametrize("mode", ["exact", "bloom"])
+    def test_finished_directory_is_not_rerun(
+        self, spark, web_tables, uninterrupted, mode
+    ):
+        seeds, robots, pages = web_tables
+        ckpt, want = uninterrupted[mode]
+        before = {p: p.stat().st_mtime_ns for p in ckpt.rglob("*")}
+        again = run_crawl(
+            spark, seeds, pages, robots, str(ckpt), max_waves=3,
+            seen_mode=mode, **CRAWL,
+        ).collect()
+        assert schedule_key(again) == want
+        assert {p: p.stat().st_mtime_ns for p in ckpt.rglob("*")} == before
+
+    def test_exhausted_crawl_is_not_extended(self, spark, web_tables, tmp_path):
+        """A crawl that ran out of candidates (last wave empty) stays ended
+        even when restarted with a larger ``max_waves``."""
+        _, robots, pages = web_tables
+        seeds = spark.createDataFrame(
+            [("https://no-such-host.example/x", 1.0, 0)],
+            "url string, score double, hops int",
+        )
+        ckpt = tmp_path / "c"
+        first = run_crawl(
+            spark, seeds, pages, robots, str(ckpt), max_waves=4, **CRAWL
+        ).collect()
+        # wave 0 schedules the seed, whose fetch finds no page; wave 1 is empty
+        assert last_committed_wave(str(ckpt)) == 1
+        before = {p: p.stat().st_mtime_ns for p in ckpt.rglob("*")}
+        again = run_crawl(
+            spark, seeds, pages, robots, str(ckpt), max_waves=6, **CRAWL
+        ).collect()
+        assert schedule_key(again) == schedule_key(first)
+        assert {p: p.stat().st_mtime_ns for p in ckpt.rglob("*")} == before

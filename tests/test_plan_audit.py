@@ -210,3 +210,86 @@ class TestFrontierPlanSingleEval:
         df.count()
         evals = _arrow_evals(df)
         assert evals.count("extract_meta") <= 1, evals
+
+
+class TestFrontierPlanShapes:
+    """Round 6's scheduling plan shapes on the unsalted path small waves
+    take. The plan pinned is the one ``crawl_wave`` checkpoints as the
+    wave's schedule, so a refactor of the wave that loses a shape fails
+    here instead of in a benchmark."""
+
+    @pytest.fixture(scope="class")
+    def wave_inputs(self, spark):
+        from warc2zim_spark.frontier.crawl import _normalize
+
+        urls = [f"https://h{h}.example/p{i}" for h in range(3) for i in range(4)]
+        pages = spark.createDataFrame(
+            [(u, f"<html><a href='/q{i}'>x</a></html>") for i, u in enumerate(urls)],
+            "url string, html string",
+        ).withColumn("html", F.col("html").cast("binary"))
+        frontier = _normalize(
+            spark.createDataFrame(
+                [(u, 0, 1.0) for u in urls], "url string, hops int, score double"
+            )
+        ).localCheckpoint(eager=True)
+        robots = spark.createDataFrame(
+            [("h1.example", "disallow", "/p1", 0), ("h2.example", "allow", "/", 1000)],
+            "host string, rule_type string, path_prefix string, crawl_delay_ms int",
+        )
+        # non-empty: an anti-join against an empty relation is optimized away
+        seen = spark.createDataFrame([("h0.example/p0",)], "surt_key string")
+        return frontier, seen, pages, robots
+
+    @staticmethod
+    def _plan(df) -> str:
+        """The physical plan as first planned (the AQE initial plan once
+        the query has run)."""
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.split("== Initial Plan ==")[-1]
+
+    def test_scheduling_chain_shapes(self, wave_inputs, monkeypatch):
+        from warc2zim_spark.frontier.crawl import crawl_wave
+
+        frontier, seen, pages, robots = wave_inputs
+        checkpointed = []
+        cls = type(frontier)
+        real = cls.localCheckpoint
+
+        def spy(self, *args, **kwargs):
+            checkpointed.append(self)
+            return real(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, "localCheckpoint", spy)
+        # run_crawl broadcasts the seen set while it is small
+        crawl_wave(
+            frontier, F.broadcast(seen), pages, robots,
+            host_budget=2, wave_budget=3, salt_partitions=0,
+        )
+        monkeypatch.undo()
+        plan = self._plan(checkpointed[0])
+        # top-k: bounded per-partition queues, and the only Window is the
+        # per-host politeness rank — no global rank window (Spark would
+        # still slip a TakeOrderedAndProject under one)
+        assert "TakeOrderedAndProject" in plan, plan
+        assert plan.count("Window [") == 1, plan
+        # seen set: broadcast anti-join, candidate side never shuffled
+        assert re.search(
+            r"BroadcastHashJoin \[surt_key#\d+\], \[surt_key#\d+\], LeftAnti", plan
+        ), plan
+        # politeness: a partial per-host top-k below the host exchange
+        lines = plan.splitlines()
+        exchange = next(
+            i for i, ln in enumerate(lines) if "Exchange hashpartitioning(host#" in ln
+        )
+        partial = [
+            i for i, ln in enumerate(lines)
+            if "WindowGroupLimit [host#" in ln and ln.rstrip().endswith("Partial")
+        ]
+        assert partial and partial[0] > exchange, plan
+
+    def test_robots_gate_has_no_window(self, wave_inputs):
+        from warc2zim_spark.frontier.politeness import robots_allowed
+
+        frontier, _, _, robots = wave_inputs
+        plan = self._plan(robots_allowed(frontier, robots))
+        assert "Window" not in plan, plan

@@ -667,3 +667,17 @@ class TestCurationPipeline:
         ids = {r.doc_id for r in curated.select("doc_id").collect()}
         # the lower-id originals win; the planted copies are gone
         assert not (ids & {90000, 90001, 90002})
+
+
+class TestMinhashCandidates:
+    def test_repeated_doc_id_gives_no_self_pair(self, spark):
+        """A doc_id that appears twice lands twice in every band bucket of
+        its text; the pairs must still satisfy id_a < id_b strictly."""
+        from warc2zim_spark.operators.dedup import minhash_candidates
+
+        text = "alpha beta gamma delta epsilon zeta eta theta " * 4
+        docs = spark.createDataFrame(
+            [(1, text), (1, text), (2, text)], "doc_id long, text string"
+        )
+        pairs = sorted(tuple(r) for r in minhash_candidates(docs).collect())
+        assert pairs == [(1, 2)]

@@ -9,8 +9,10 @@ Iterative batch (NOT Structured Streaming — SURVEY §2.8): each wave
      (hops+1, inherited score decayed)
   5. seen-filter update: scheduled keys enter the seen set (exact mode) or
      the partitioned bloom (scale mode)
-  6. checkpoint wave output + metrics to parquet (Iceberg-shaped layout) —
-     resumable: ``resume_crawl`` restarts from the last committed wave.
+  6. checkpoint wave output + metrics to parquet (Iceberg-shaped layout),
+     then a ``_SUCCESS_WAVE`` marker. One loop serves fresh and resumed
+     crawls: ``run_crawl`` loads its state from the last committed wave
+     (or the seeds) and continues from the next wave.
 
 Determinism contract (north_rule): the scheduled set + ordering per wave is
 a pure function of (seed list, politeness budget, page table) — independent
@@ -21,7 +23,6 @@ ties broken by surt_key.
 from __future__ import annotations
 
 import json
-import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,10 +43,9 @@ SCORE_DECAY = 0.5
 # exact-mode seen sets are broadcast-joined while they provably fit (keys
 # only, ~100 B/row → ≤ a few hundred MB at these caps); beyond them the
 # plain shuffle joins (and, for seen, the partitioned-bloom mode — the
-# actual 10^10-key design point) take over. Env-overridable for cluster
-# tiers with more executor memory.
-_FETCH_BROADCAST_MAX = int(os.environ.get("W2ZS_FETCH_BROADCAST_MAX", "2000000"))
-_SEEN_BROADCAST_MAX = int(os.environ.get("W2ZS_SEEN_BROADCAST_MAX", "2000000"))
+# actual 10^10-key design point) take over.
+_FETCH_BROADCAST_MAX = 2_000_000
+_SEEN_BROADCAST_MAX = 2_000_000
 
 
 # rows whose url failed canonicalization or host extraction (UDFs return
@@ -157,6 +157,24 @@ def crawl_wave(
     # long gone) — without the barrier every wave's scheduling windows
     # recompute inside the next wave's frontier checkpoint
 
+    if pages_keyed is None:
+        pages_keyed = page_lookup(pages)
+    return scheduled, wave_links(scheduled, pages, pages_keyed, wave_budget)
+
+
+def wave_links(
+    scheduled: DataFrame,
+    pages: DataFrame,
+    pages_keyed: DataFrame,
+    wave_budget: int | None,
+) -> DataFrame:
+    """Fetch + link half of a wave: scheduled rows → next-frontier
+    candidates (url, hops+1, decayed score, surt_key, host).
+
+    ``crawl_wave`` runs it over the schedule it just computed; ``run_crawl``
+    runs it alone over the last committed wave's rows to rebuild the
+    frontier on resume. ``wave_budget`` bounds the scheduled row count and
+    only decides whether the hit set is broadcast."""
     # "fetch": canonical-key join against the page table; extract links.
     # The scheduled keys pick their winning page_url on the NARROW lookup,
     # then html is attached by streaming the page table through a hash probe
@@ -166,14 +184,13 @@ def crawl_wave(
     # either broadcast ~100 MB of html per wave or probed it from the
     # single-partition schedule side, serializing the whole HTML parse into
     # one task — guide §8: decide with small rows, move big rows once).
-    page_keyed = pages_keyed if pages_keyed is not None else page_lookup(pages)
-    hits = scheduled.join(page_keyed, "surt_key")
+    hits = scheduled.join(pages_keyed, "surt_key")
     if wave_budget is not None and wave_budget <= _FETCH_BROADCAST_MAX:
         hits = F.broadcast(hits)
     fetched = hits.join(
         pages.select(F.col("url").alias("page_url"), "html"), "page_url"
     )
-    links = (
+    return (
         fetched.filter(F.col("html").isNotNull())
         .select(
             "hops", "score",
@@ -198,7 +215,6 @@ def crawl_wave(
             F.col("l.host").alias("host"),
         )
     )
-    return scheduled, links
 
 
 def run_crawl(
@@ -210,19 +226,25 @@ def run_crawl(
     max_waves: int = 4,
     host_budget: int = 8,
     wave_budget: int = 1000,
-    start_wave: int = 0,
-    initial_seen: DataFrame | None = None,
-    initial_frontier: DataFrame | None = None,
     seen_mode: str = "exact",
     bloom_partitions: int = 32,
     bloom_m_bits: int = 1 << 20,
-    initial_bloom: DataFrame | None = None,
     salt_partitions: int = DEFAULT_SALT_PARTITIONS,
     salt_min_candidates: int = 1_000_000,
 ) -> DataFrame:
-    """Run (or resume) the BFS crawl; returns the full schedule
-    (wave, url, surt_key, host, hops, score) read back from the checkpoint
-    directory — the durable artifact, matching what a restarted job sees.
+    """Run the BFS crawl, or resume it from ``checkpoint_dir``; returns the
+    full schedule (wave, url, surt_key, host, hops, score) of the committed
+    waves read back from the checkpoint directory — the durable artifact,
+    matching what a restarted job sees.
+
+    Resume is the same loop started from loaded state: when the directory
+    holds committed waves (``_SUCCESS_WAVE`` markers), the seen set is their
+    keys, the bloom is the filter persisted after the last of them (or one
+    rebuilt from the keys when it is missing), and the frontier is the
+    fetch+links half of a wave (``wave_links``) rerun over the last
+    committed wave's rows. A wave directory without its marker is
+    recomputed and overwritten. A directory whose crawl already ended (last
+    wave empty, or ``max_waves`` reached) is returned as is.
 
     ``seen_mode="bloom"`` drives the seen-filter as the partitioned bloom
     (north_star headline): each wave's scheduled keys build a fixed-size
@@ -245,18 +267,34 @@ def run_crawl(
 
     ckpt = Path(checkpoint_dir)
     ckpt.mkdir(parents=True, exist_ok=True)
-    # spread the seed pass: seeds routinely arrive as ONE partition (a limit,
-    # a collected list, a tiny file), which would run the surt/host UDF pass
-    # — and everything until the first exchange — in a single task. A
-    # round-robin repartition of the (tiny, urls-only) seed rows costs
-    # nothing and restores wave-0 parallelism (r06; set identical, order
-    # explicitly re-established by every downstream sort key).
-    n_parts = spark.sparkContext.defaultParallelism
-    frontier_ckpt = (
-        initial_frontier
-        if initial_frontier is not None
-        else _normalize_cols(seeds.repartition(n_parts))
-    ).localCheckpoint(eager=False)
+    last = last_committed_wave(checkpoint_dir)
+    if last + 1 >= max_waves or (last >= 0 and _wave_scheduled(ckpt, last) == 0):
+        return _committed_schedule(spark, ckpt)
+    pages_keyed = page_lookup(pages).cache()
+    if last < 0:
+        # spread the seed pass: seeds routinely arrive as ONE partition (a
+        # limit, a collected list, a tiny file), which would run the
+        # surt/host UDF pass — and everything until the first exchange — in
+        # a single task. A round-robin repartition of the (tiny, urls-only)
+        # seed rows costs nothing and restores wave-0 parallelism (r06; set
+        # identical, order explicitly re-established by every downstream
+        # sort key).
+        next_frontier = _normalize_cols(
+            seeds.repartition(spark.sparkContext.defaultParallelism)
+        )
+        seen = spark.createDataFrame([], "surt_key string")
+        seen_count = 0
+    else:
+        done = _committed_schedule(spark, ckpt)
+        # no distinct: every wave's keys survived the anti-join against all
+        # earlier waves, so the committed waves are already disjoint
+        seen = done.select("surt_key")
+        seen_count = seen.count()
+        next_frontier = wave_links(
+            done.filter(F.col("wave") == last).drop("wave"),
+            pages, pages_keyed, wave_budget,
+        )
+    frontier_ckpt = next_frontier.localCheckpoint(eager=False)
     # one job materializes the (lazy) checkpoint AND returns the candidate
     # count the salt heuristic needs (r06 — was an eager-checkpoint job plus
     # a separate count job per wave). The count is now pre-_valid-filter;
@@ -265,26 +303,20 @@ def run_crawl(
     # depend on which side of the threshold a wave lands.
     frontier_count = frontier_ckpt.count()
     frontier = frontier_ckpt.filter(_valid())
-    seen = (
-        initial_seen
-        if initial_seen is not None
-        else spark.createDataFrame([], "surt_key string")
-    )
-    # exact-mode seen keys are counted as they accumulate (each wave adds
-    # exactly n_scheduled NEW keys — the anti-join guarantees disjointness),
-    # so the wave can broadcast the probe side while it provably fits
-    seen_count = initial_seen.count() if initial_seen is not None else 0
     seen_bloom = None
     if seen_mode == "bloom":
-        # resume fast-path: the persisted filter itself (no key rebuild)
+        # the filter persisted after the last committed wave; a crash
+        # between that wave's marker and the filter write loses it, and the
+        # committed keys rebuild the same bitmaps (bloom bits are a pure
+        # function of the key set at a fixed m_bits)
+        bloom_path = ckpt / f"seen_bloom_wave={last}"
         seen_bloom = (
-            initial_bloom
-            if initial_bloom is not None
+            spark.read.parquet(str(bloom_path))
+            if (bloom_path / "_SUCCESS").exists()
             else build_bloom(
                 seen, num_partitions=bloom_partitions, m_bits=bloom_m_bits
             )
         ).localCheckpoint(eager=True)
-    pages_keyed = page_lookup(pages).cache()
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import Observation
@@ -299,7 +331,7 @@ def run_crawl(
     # (it is first needed only at the mid-wave fetch join).
     with ThreadPoolExecutor(max_workers=2) as pool:
         warm_lookup = pool.submit(pages_keyed.count)
-        for wave in range(start_wave, max_waves):
+        for wave in range(last + 1, max_waves):
             # candidate count decides whether this wave's salted pre-windows
             # are worth their extra shuffle (skew-conditional salting);
             # collected for free by the checkpoint-materializing job above
@@ -382,12 +414,22 @@ def run_crawl(
             frontier = frontier_ckpt.filter(_valid())
         warm_lookup.result()
     pages_keyed.unpersist()
-    waves = sorted(int(p.name.split("=")[1]) for p in ckpt.glob("wave=*") if p.is_dir())
-    return (
-        spark.read.parquet(*[str(ckpt / f"wave={w}") for w in waves])
-        if waves
-        else spark.createDataFrame([], "wave int, url string, surt_key string, host string, hops int, score double")
-    )
+    return _committed_schedule(spark, ckpt)
+
+
+def _wave_scheduled(ckpt: Path, wave: int) -> int:
+    """Scheduled row count of a committed wave, from its metrics file
+    (written before the wave's marker)."""
+    return json.loads((ckpt / f"wave={wave}._metrics.json").read_text())["scheduled"]
+
+
+def _committed_schedule(spark: SparkSession, ckpt: Path) -> DataFrame:
+    last = last_committed_wave(str(ckpt))
+    if last < 0:
+        return spark.createDataFrame(
+            [], "wave int, url string, surt_key string, host string, hops int, score double"
+        )
+    return spark.read.parquet(*[str(ckpt / f"wave={w}") for w in range(last + 1)])
 
 
 def last_committed_wave(checkpoint_dir: str) -> int:
@@ -399,38 +441,3 @@ def last_committed_wave(checkpoint_dir: str) -> int:
     ]
     return max(done) if done else -1
 
-
-def resume_crawl(
-    spark: SparkSession,
-    seeds: DataFrame,
-    pages: DataFrame,
-    robots: DataFrame,
-    checkpoint_dir: str,
-    max_waves: int = 4,
-    **kwargs,
-) -> DataFrame:
-    """Restart after interruption: rebuild seen-set + frontier from committed
-    waves, continue from the next wave (north_rule resumability)."""
-    last = last_committed_wave(checkpoint_dir)
-    if last < 0:
-        return run_crawl(spark, seeds, pages, robots, checkpoint_dir,
-                         max_waves=max_waves, **kwargs)
-    ckpt = Path(checkpoint_dir)
-    done = spark.read.parquet(*[str(ckpt / f"wave={w}") for w in range(last + 1)])
-    seen = done.select("surt_key").distinct()
-    # bloom mode: resume from the persisted FILTER (written after each wave)
-    # instead of rebuilding it from every committed wave's keys
-    if kwargs.get("seen_mode") == "bloom":
-        bloom_path = ckpt / f"seen_bloom_wave={last}"
-        if bloom_path.exists():
-            kwargs = {**kwargs, "initial_bloom": spark.read.parquet(str(bloom_path))}
-    # recompute the frontier produced by the last committed wave
-    _, frontier = crawl_wave(
-        done.filter(F.col("wave") == last).select("url", "surt_key", "host", "hops", "score"),
-        seen.join(done.filter(F.col("wave") == last).select("surt_key"), "surt_key", "left_anti"),
-        pages, robots, **{k: v for k, v in kwargs.items() if k in ("host_budget", "wave_budget")},
-    )
-    return run_crawl(
-        spark, seeds, pages, robots, checkpoint_dir, max_waves=max_waves,
-        start_wave=last + 1, initial_seen=seen, initial_frontier=frontier, **kwargs,
-    )

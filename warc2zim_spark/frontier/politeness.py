@@ -31,9 +31,7 @@ DEFAULT_SALT_PARTITIONS = 32
 # largest wave budget served by orderBy+limit (TakeOrderedAndProject): the
 # per-partition top-k queue holds `budget` rows, so the cap bounds per-task
 # memory at ~budget × rowsize; larger budgets take the windowed-rank path.
-import os as _os
-
-_TOPK_LIMIT_MAX = int(_os.environ.get("W2ZS_TOPK_LIMIT_MAX", "2000000"))
+_TOPK_LIMIT_MAX = 2_000_000
 
 
 def robots_allowed(candidates: DataFrame, robots: DataFrame, path_col: str = "surt_key") -> DataFrame:
@@ -50,7 +48,12 @@ def robots_allowed(candidates: DataFrame, robots: DataFrame, path_col: str = "su
     "what's wrong" #3); an empty/irrelevant rules table now costs one empty
     broadcast. Decision equivalence: the old window kept the longest
     matching rule with allow winning ties, i.e. allowed ⇔ no matching rule
-    OR max(matching allow prefix len) ≥ max(matching disallow prefix len)."""
+    OR max(matching allow prefix len) ≥ max(matching disallow prefix len).
+
+    Keeps input multiplicity: a map-side filter, so each allowed row passes
+    once per occurrence and candidates sharing a ``path_col`` value are not
+    collapsed. ``crawl_wave`` feeds it surt-unique rows; other callers
+    dedup first if they need one row per key."""
     path_expr = F.expr(f"substring({path_col}, length(host) + 1)")
     rules_by_host = (
         robots.filter(F.col("path_prefix").isNotNull())

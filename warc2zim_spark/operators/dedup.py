@@ -82,7 +82,10 @@ def minhash_candidates(
     # identically (oversized pathological buckets are dropped whole).
     buckets = (
         exploded.groupBy("band_no", "band_key")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
+        # array_distinct: a doc_id repeated in the input would otherwise
+        # sit twice in the sorted array and emit an (id, id) self-pair;
+        # distinct ids keep id_a < id_b strict
+        .agg(F.array_distinct(F.sort_array(F.collect_list("doc_id"))).alias("ids"))
         .filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
     )
     pair = F.explode(
